@@ -45,11 +45,6 @@ def str2dur(s: str) -> timedelta:
     return timedelta(seconds=total)
 
 
-def dur_to_interval(d: timedelta) -> str:
-    """Render a timedelta as a Spark window/INTERVAL duration string."""
-    return f"{int(d.total_seconds())} seconds"
-
-
 @dataclass
 class PipelineConfig:
     # discretization (config.conf.default:153-160)

@@ -29,6 +29,7 @@ from logdag_spark.operators.text import (
     token_count,
 )
 from logdag_spark.pipeline.aggregate import binarize, discretize, fill_bins, rebin
+from logdag_spark.pipeline.correlate import fisherz_dependent, pairwise_corr
 
 T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 T_END = datetime(2024, 1, 31, tzinfo=timezone.utc)
@@ -39,10 +40,13 @@ Z99 = NormalDist().inv_cdf(1 - 0.01 / 2)  # alpha = 0.01 two-sided
 
 
 def _size_bytes(conf_val: str) -> int:
+    """Spark byte-size string ('128m', '128mb', '1g', '1024b', '1024')."""
     v = conf_val.strip().lower()
-    for suf, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
+    if v.endswith("b"):
+        v = v[:-1]
+    for suf, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
         if v.endswith(suf):
-            return int(float(v[: -len(suf)])) * mult
+            return int(float(v[: -len(suf)]) * mult)
     return int(v)
 
 
@@ -623,60 +627,33 @@ def _hourly_filled_sql() -> str:
   )"""
 
 
-def _hourly_filled(spark, sf_dir) -> DataFrame:
+def _hourly_matrix(spark, sf_dir, unit: F.Column) -> DataFrame:
+    """Hourly event_type counts as the library's sparse correlate input
+    ``(unit, eid, bin, cnt)``, with event_type as the eid."""
     b = discretize(
         _events_routed(spark, sf_dir), RANGE,
         timedelta(hours=1), keys=("key",),
     )
-    # persisted: consumed on both sides of the pairwise self-join, and
-    # Catalyst plans the aliases as independent full scans of the raw
-    # events table (no exchange reuse, verified on the executed plan).
-    # One cached row per (key, bin) — the production pipeline gets the
-    # same effect from the events_ts checkpoint.
-    return fill_bins(b, RANGE, timedelta(hours=1), keys=("key",)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # persisted: pairwise_corr reads the matrix three times (per-event
+    # moments and both sides of the co-occurrence self-join), each of
+    # which would otherwise re-scan and re-bin the raw events table
+    return b.select(
+        unit.alias("unit"), F.col("key").alias("eid"), "bin", "cnt"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _pair_suff_stats(filled: DataFrame):
-    """Exact Pearson sufficient statistics per (type1 < type2) pair.
-
-    Replaces ``F.corr``: its Welford-style partials merge in partition
-    order, so the 6th rounded decimal could depend on the session's
-    core count (see ``_spread``).  The counts are integer-valued
-    doubles, so n/Σx/Σy/Σxy/Σx²/Σy² are EXACT at any partitioning
-    (≤ 2^53) and the per-pair scalar r is bit-deterministic — and the
-    hash aggregate is also cheaper than the imperative corr buffer."""
-    a = filled.select(F.col("key").alias("type1"), "bin", F.col("cnt").alias("c1"))
-    b = filled.select(F.col("key").alias("type2"), "bin", F.col("cnt").alias("c2"))
-    stats = (
-        a.join(b, "bin")
-        .where(F.col("type1") < F.col("type2"))
-        .groupBy("type1", "type2")
-        .agg(
-            F.count("*").alias("_n"),
-            F.sum("c1").alias("_sx"),
-            F.sum("c2").alias("_sy"),
-            F.sum(F.col("c1") * F.col("c2")).alias("_sxy"),
-            F.sum(F.col("c1") * F.col("c1")).alias("_sxx"),
-            F.sum(F.col("c2") * F.col("c2")).alias("_syy"),
-        )
-    )
-    n = F.col("_n").cast("double")
-    v1 = n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    v2 = n * F.col("_syy") - F.col("_sy") * F.col("_sy")
-    cov = n * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2))
-    return stats, r
+def _term_corr(spark, sf_dir) -> DataFrame:
+    """Pearson r per event_type pair over the whole term as one unit."""
+    mat = _hourly_matrix(spark, sf_dir, F.lit("all"))
+    nb = spark.createDataFrame([("all", TERM_S // 3600)], "unit string, n long")
+    return pairwise_corr(mat, nb)
 
 
 def q_pairwise_corr_1h(spark, sf_dir):
-    filled = _hourly_filled(spark, sf_dir)
-    stats, r = _pair_suff_stats(filled)
-    return (
-        stats.withColumn("r", F.round(r, 6))
-        .where(F.col("r").isNotNull())
-        .select("type1", "type2", "r")
+    return _term_corr(spark, sf_dir).where(F.col("r").isNotNull()).select(
+        F.col("eid1").alias("type1"),
+        F.col("eid2").alias("type2"),
+        F.round("r", 6).alias("r"),
     )
 
 
@@ -692,16 +669,11 @@ GROUP BY 1, 2 HAVING corr(a.cnt, b.cnt) IS NOT NULL
 
 
 def q_fisherz_edges_1h(spark, sf_dir):
-    filled = _hourly_filled(spark, sf_dir)
-    n = TERM_S // 3600
-    stats, r = _pair_suff_stats(filled)
-    pairs = stats.withColumn("_r", r).where(F.col("_r").isNotNull())
-    rc = F.least(F.greatest(F.col("_r"), F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
-    z = 0.5 * F.log((1 + rc) / (1 - rc)) * F.sqrt(F.lit(float(n - 3)))
-    return (
-        pairs.withColumn("_z", z)
-        .where(F.abs(F.col("_z")) > Z99)
-        .select("type1", "type2", F.round("_r", 6).alias("r"), F.round("_z", 6).alias("z"))
+    return fisherz_dependent(_term_corr(spark, sf_dir), alpha=0.01).select(
+        F.col("eid1").alias("type1"),
+        F.col("eid2").alias("type2"),
+        F.round("r", 6).alias("r"),
+        F.round("z", 6).alias("z"),
     )
 
 
@@ -732,47 +704,17 @@ FROM zz WHERE abs(z) > {Z99!r}
 
 def _daily_edges(spark, sf_dir) -> DataFrame:
     """Per-day units: hourly-binned event_type series, Fisher-z edges."""
-    ev = _events_routed(spark, sf_dir)
-    b = discretize(ev, RANGE, timedelta(hours=1), keys=("key",))
-    day = F.date_format("bin", "yyyyMMdd").alias("unit")
-    # persisted: three consumers (stats + both cross-term sides) would
-    # otherwise each re-scan and re-bin the raw events table
-    hourly = b.select(day, "key", "bin", "cnt").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # zero-filled per (unit, key): 24 bins/day; sparse sufficient stats
-    stats = hourly.groupBy("unit", "key").agg(
-        F.sum("cnt").alias("sx"), F.sum(F.col("cnt") * F.col("cnt")).alias("sxx")
-    )
-    a = hourly.select("unit", F.col("key").alias("k1"), "bin", F.col("cnt").alias("c1"))
-    bb = hourly.select("unit", F.col("key").alias("k2"), "bin", F.col("cnt").alias("c2"))
-    cross = (
-        a.join(bb, ["unit", "bin"])
-        .where(F.col("k1") < F.col("k2"))
-        .groupBy("unit", "k1", "k2")
-        .agg(F.sum(F.col("c1") * F.col("c2")).alias("sxy"))
-    )
-    s1 = stats.select("unit", F.col("key").alias("k1"), F.col("sx").alias("sx1"), F.col("sxx").alias("sxx1"))
-    s2 = stats.select("unit", F.col("key").alias("k2"), F.col("sx").alias("sx2"), F.col("sxx").alias("sxx2"))
-    n = F.lit(24.0)
-    pairs = (
-        s1.join(s2, "unit")
-        .where(F.col("k1") < F.col("k2"))
-        .join(cross, ["unit", "k1", "k2"], "left")
-        .withColumn("sxy", F.coalesce("sxy", F.lit(0.0)))
-    )
-    cov = n * F.col("sxy") - F.col("sx1") * F.col("sx2")
-    v1 = n * F.col("sxx1") - F.col("sx1") * F.col("sx1")
-    v2 = n * F.col("sxx2") - F.col("sx2") * F.col("sx2")
-    r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2))
-    rc = F.least(F.greatest(r, F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
-    z = 0.5 * F.log((1 + rc) / (1 - rc)) * F.sqrt(F.lit(21.0))
-    return (
-        pairs.withColumn("_r", r)
-        .where(F.col("_r").isNotNull())
-        .withColumn("_z", z)
-        .where(F.abs(F.col("_z")) > Z99)
-        .select("unit", "k1", "k2", F.round("_r", 6).alias("r"))
+    mat = _hourly_matrix(spark, sf_dir, F.date_format("bin", "yyyyMMdd"))
+    days = [
+        ((T0 + timedelta(days=i)).strftime("%Y%m%d"), 24)
+        for i in range((T_END - T0).days)
+    ]
+    nb = spark.createDataFrame(days, "unit string, n long")
+    return fisherz_dependent(pairwise_corr(mat, nb), alpha=0.01).select(
+        "unit",
+        F.col("eid1").alias("k1"),
+        F.col("eid2").alias("k2"),
+        F.round("r", 6).alias("r"),
     )
 
 

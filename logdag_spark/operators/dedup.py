@@ -25,6 +25,10 @@ from pyspark.storagelevel import StorageLevel
 
 from logdag_spark.operators.text import tokenize
 
+# cap on simhash_near_dups' per-document probe fan-out, Σ_t C(width_t, <=tol)
+# (the default n_tables at max_hamming <= 64 stays below ~2.1k)
+SIMHASH_MAX_VARIANTS = 4096
+
 
 # ------------------------------------------------------------------- exact
 
@@ -639,6 +643,9 @@ def simhash_near_dups(
     bucket quadratics it removes.  At 100 TB the trade reads: ~70x more
     (tiny) probe rows through the bucket shuffle, quadratically fewer
     generated candidate pairs out of it — and n_tables stays a knob.
+    A choice whose fan-out exceeds ``SIMHASH_MAX_VARIANTS`` (e.g.
+    ``n_tables=1, max_hamming=8``: ~4.9e9 masks) raises ``ValueError``
+    before any mask is built.
 
     The variant fan-out is a BROADCAST join against a <=2k-row
     driver-built (slice, flip-mask) table, not a literal array explode:
@@ -694,9 +701,24 @@ def simhash_near_dups(
         )
 
     from itertools import combinations
+    from math import comb
+
+    n_masks = sum(
+        comb(slice_width(t), r) for t in range(n_tables) for r in range(tol + 1)
+    )
+    if n_masks > SIMHASH_MAX_VARIANTS:
+        raise ValueError(
+            f"n_tables={n_tables}, max_hamming={max_hamming} needs {n_masks} "
+            f"variant masks per document (cap {SIMHASH_MAX_VARIANTS}); "
+            f"raise n_tables"
+        )
+
+    def signed64(m: int) -> int:
+        # a bit-63 flip must fit the signed ``long`` mask column
+        return m - (1 << 64) if m >> 63 else m
 
     mask_rows = [
-        (t, sum(1 << p for p in c))
+        (t, signed64(sum(1 << p for p in c)))
         for t in range(n_tables)
         for r in range(tol + 1)
         for c in combinations(range(slice_width(t)), r)

@@ -441,28 +441,6 @@ def dag_vectors(
     )
 
 
-def vector_cosine_matrix(vec: DataFrame) -> DataFrame:
-    """Pairwise cosine between unit vectors (any space/weight):
-    one self-join on feat, norms from a single aggregate."""
-    norm = vec.groupBy("unit").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-    a = vec.select(F.col("unit").alias("unit1"), "feat", F.col("w").alias("w1"))
-    b = vec.select(F.col("unit").alias("unit2"), "feat", F.col("w").alias("w2"))
-    dots = (
-        a.join(b, "feat")
-        .where(F.col("unit1") < F.col("unit2"))
-        .groupBy("unit1", "unit2")
-        .agg(F.sum(F.col("w1") * F.col("w2")).alias("dot"))
-    )
-    n1 = norm.select(F.col("unit").alias("unit1"), F.col("nrm").alias("n1"))
-    n2 = norm.select(F.col("unit").alias("unit2"), F.col("nrm").alias("n2"))
-    return (
-        dots.join(F.broadcast(n1), "unit1")
-        .join(F.broadcast(n2), "unit2")
-        .withColumn("cosine", F.col("dot") / (F.col("n1") * F.col("n2")))
-        .select("unit1", "unit2", "dot", "cosine")
-    )
-
-
 def kmeans_units(
     vec: DataFrame, k: int, max_iter: int = 20
 ) -> DataFrame:

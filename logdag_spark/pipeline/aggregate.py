@@ -201,11 +201,3 @@ def rebin(
     idx = _floordiv(F.unix_millis(F.col("bin")) - t0_ms, size)
     label = F.timestamp_millis(F.lit(t0_ms) + idx * size)
     return binned.groupBy(*keys, label.alias("bin")).agg(F.sum("cnt").alias("cnt"))
-
-
-def salt_heavy_keys(df: DataFrame, key_cols: Sequence[str], n_salt: int = 16) -> DataFrame:
-    """Two-phase aggregation helper for Zipf-skewed keys (SURVEY.md §4):
-    add a deterministic salt column derived from the row's timestamp so a
-    hot (host, gid) spreads over ``n_salt`` reducers; aggregate on
-    (keys, salt) first, then on keys."""
-    return df.withColumn("_salt", F.pmod(F.xxhash64("ts"), F.lit(n_salt)))

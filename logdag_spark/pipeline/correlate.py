@@ -207,6 +207,17 @@ def pairwise_corr(
     produced ``noedge`` — :func:`pknowledge.host_allow_pairs` guarantees
     it); a host-pruned pair still in the pair universe would surface with
     a silently zeroed cross term.
+
+    Zero variance: a pair with a constant series (all N bins equal) has
+    ``r`` NULL, the semantics of SQL ``corr`` and ``np.corrcoef``; the
+    [-1, 1] clamp sits inside the ``when`` because ``greatest``/``least``
+    skip NULLs and would turn that NULL into -1.
+
+    Exactness: the sums accumulate in double (discretize's ``sum(val)``
+    carries fractional SNMP feature values, so a ``long`` accumulator
+    would be wrong).  For integer-valued counts every partial sum is an
+    exact integer while each of Σx, Σx², Σxy stays <= 2^53, so ``r`` is
+    then bit-identical at any partitioning.
     """
     stats = (
         matrix.groupBy("unit", "eid")
@@ -245,24 +256,30 @@ def pairwise_corr(
     cov = n * F.col("sxy") - F.col("sx1") * F.col("sx2")
     v1 = n * F.col("sxx1") - F.col("sx1") * F.col("sx1")
     v2 = n * F.col("sxx2") - F.col("sx2") * F.col("sx2")
-    r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2)).otherwise(F.lit(0.0))
-    return pairs.select(
-        "unit", "eid1", "eid2", "n", F.least(F.greatest(r, F.lit(-1.0)), F.lit(1.0)).alias("r")
-    )
+    r = cov / F.sqrt(v1 * v2)
+    r = F.when((v1 > 0) & (v2 > 0), F.least(F.greatest(r, F.lit(-1.0)), F.lit(1.0)))
+    return pairs.select("unit", "eid1", "eid2", "n", r.alias("r"))
 
 
-def fisherz_edges(pair_corr: DataFrame, alpha: float = 0.01) -> DataFrame:
-    """Depth-0 Fisher-z dependence edges (``pc-corr`` semantics,
-    /root/reference/logdag/makedag.py:116-122; test form
-    /root/reference/logdag/pc_input.py:106-126)."""
+def fisherz_dependent(pair_corr: DataFrame, alpha: float = 0.01) -> DataFrame:
+    """Pairs of ``pair_corr(unit, eid1, eid2, n, r)`` that the depth-0
+    Fisher-z test keeps (reference logdag/pc_input.py:106-126),
+    with the statistic added as column ``z``; NULL ``r`` never passes."""
     z_crit = NormalDist().inv_cdf(1 - alpha / 2)
     # clamp away from ±1: atanh diverges there (perfectly correlated
     # series, e.g. duplicated events) and ANSI mode rejects the /0
     r = F.least(F.greatest(F.col("r"), F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
     z = 0.5 * F.log((1 + r) / (1 - r)) * F.sqrt(F.col("n") - 3)
+    return pair_corr.withColumn("z", F.when(F.col("r").isNotNull(), z)).where(
+        F.abs(F.col("z")) > z_crit
+    )
+
+
+def fisherz_edges(pair_corr: DataFrame, alpha: float = 0.01) -> DataFrame:
+    """Depth-0 Fisher-z dependence edges (``pc-corr`` semantics,
+    reference logdag/makedag.py:116-122) in the ``dag_edges`` shape."""
     return (
-        pair_corr.withColumn("z", z)
-        .where(F.abs(F.col("z")) > z_crit)
+        fisherz_dependent(pair_corr, alpha)
         .select(
             "unit",
             F.col("eid1").alias("src_eid"),

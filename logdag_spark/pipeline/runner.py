@@ -33,11 +33,7 @@ from logdag_spark.pipeline.correlate import (
     unit_specs,
 )
 from logdag_spark.pipeline.enrich import enrich
-from logdag_spark.pipeline.parse import (
-    parse_tokens,
-    parse_tokens_arrow,
-    parse_tokens_pandas,
-)
+from logdag_spark.pipeline.parse import parse_tokens_arrow
 from logdag_spark.pipeline.pc import orient_depth0_edges, pc_edges
 from logdag_spark.pipeline.pknowledge import (
     build_noedge,
@@ -78,7 +74,6 @@ def run_pipeline(
     dt_range: tuple[datetime, datetime],
     cfg: PipelineConfig | None = None,
     catalog: Catalog | None = None,
-    use_pandas_parse: bool = True,
     apply_filters: bool = True,
     pk_context: dict | None = None,
     checkpoint_stages: tuple[str, ...] = (
@@ -97,19 +92,11 @@ def run_pipeline(
     instead of paying two pure-serial collect jobs per run.  When absent
     they are collected from the DataFrames (the dims are tiny)."""
     cfg = cfg or PipelineConfig()
-    # use_pandas_parse=True selects the vectorized Python kernel family:
-    # the scalar-arrow_udf kernel on PySpark 4.x, the pandas_udf kernel
-    # otherwise (same semantics, impls-agree-tested); False selects the
-    # pure-Catalyst joins for Python-worker-free deployments
-    if use_pandas_parse:
-        _parse = (
-            parse_tokens_arrow if hasattr(F, "arrow_udf") else parse_tokens_pandas
-        )
-    else:
-        _parse = parse_tokens
 
     def parse(df: DataFrame, tdim: DataFrame) -> DataFrame:
-        return _parse(df, template_specs if template_specs is not None else tdim)
+        return parse_tokens_arrow(
+            df, template_specs if template_specs is not None else tdim
+        )
 
     def ck(df: DataFrame, name: str, partition_by=None) -> DataFrame:
         if catalog is None or name not in checkpoint_stages:

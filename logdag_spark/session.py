@@ -15,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of the memory this host grants the process: the smaller of
+    physical RAM and the cgroup v2 ``memory.max`` limit.  In local mode
+    the driver heap is the executor heap; the other half is left to the
+    Python workers and the JVM's off-heap use."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = min(limit, int(f.read().strip()))
+    except (OSError, ValueError):  # no cgroup v2, or "max" (unlimited)
+        pass
+    return f"{max(512, (limit // 2) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "logdag_spark",
     cores: int | None = None,
@@ -45,7 +59,10 @@ def get_spark(
         # (token arrays, embeddings) are ~0.5KB -> ~32MB per batch, well
         # inside executor memory
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # task-commit renames instead of a serial job-commit rename loop
@@ -64,9 +81,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -8,11 +8,9 @@ watermark-compatible so a streaming ingest can feed the same events_ts
 table the batch pipeline reads:
 
     readStream(tokens) -> parse -> enrich -> route
-      -> withWatermark(ts) -> window(bin) count -> foreachBatch append
+      -> withWatermark(ts) -> window(bin) count
 
-``foreachBatch`` gives idempotent micro-batch writes into the same
-partitioned layout the Catalog uses — the batch correlate/PC stages then
-run unchanged over the accumulating table.
+The caller picks the sink (``writeStream`` in append mode).
 """
 
 from __future__ import annotations
@@ -53,25 +51,6 @@ def streaming_counts(
         .select(
             "measure", "host", "key", F.col("w.start").alias("bin"), "cnt"
         )
-    )
-
-
-def write_stream_to_events_ts(counts: DataFrame, path: str, checkpoint: str):
-    """Micro-batch append with dynamic partition overwrite per batch —
-    exactly-once into the events_ts layout."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("day", F.to_date("bin"))
-            .write.mode("append")
-            .partitionBy("measure", "day")
-            .parquet(path)
-        )
-
-    return (
-        counts.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
     )
 
 

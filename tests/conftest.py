@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from logdag_spark.session import get_spark
@@ -7,7 +9,8 @@ from logdag_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="logdag_spark_tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
+    s = get_spark(app_name="logdag_spark_tests", cores=cores, shuffle_partitions=8)
     yield s
     s.stop()
 

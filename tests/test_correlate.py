@@ -153,3 +153,54 @@ def test_gsq_edges_matches_dense_kernel(spark):
             # decision parity with the grouped-map kernel's CI test
             p_dense = ci_test_gsq(dense, i, j, ())
             assert (got[key] > crit) == (p_dense < 0.01), (i, j)
+
+
+def _dense_matrix(spark, dense: np.ndarray):
+    """Sparse ``(unit, eid, bin, cnt)`` rows of a bins x events matrix."""
+    rows = [
+        ("u", j, DEFAULT_T0 + timedelta(hours=i), float(dense[i, j]))
+        for i in range(dense.shape[0])
+        for j in range(dense.shape[1])
+        if dense[i, j]
+    ]
+    mat = spark.createDataFrame(
+        rows, "unit string, eid int, bin timestamp, cnt double"
+    )
+    nb = spark.createDataFrame([("u", dense.shape[0])], "unit string, n long")
+    return mat, nb
+
+
+def test_zero_variance_pair_is_null_and_never_an_edge(spark):
+    """A constant series has no correlation: r is NULL (SQL corr,
+    np.corrcoef), not the -1 that greatest/least would make of a NULL,
+    and the Fisher-z test drops it."""
+    rng = np.random.default_rng(3)
+    x = rng.integers(0, 6, 24)
+    dense = np.stack([np.ones(24), x, x + (rng.random(24) < 0.2)], axis=1)
+    mat, nb = _dense_matrix(spark, dense)
+    got = {(r["eid1"], r["eid2"]): r["r"] for r in pairwise_corr(mat, nb).collect()}
+    assert got[(0, 1)] is None and got[(0, 2)] is None
+    assert abs(got[(1, 2)] - np.corrcoef(dense[:, 1], dense[:, 2])[0, 1]) < 1e-12
+    edges = {(r["src_eid"], r["dst_eid"]) for r in fisherz_edges(pairwise_corr(mat, nb)).collect()}
+    assert edges == {(1, 2)}
+
+
+def test_pairwise_corr_bit_identical_across_partitionings(spark):
+    """Integer-valued counts keep every sum exact (<= 2^53), so r does not
+    depend on how the aggregates are split."""
+    rng = np.random.default_rng(11)
+    dense = rng.poisson(0.8, (300, 12)) * (rng.random((300, 12)) < 0.5)
+    mat, nb = _dense_matrix(spark, dense)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    runs = []
+    try:
+        for parts in ("1", "4", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            runs.append(sorted(
+                (r["eid1"], r["eid2"], r["r"])
+                for r in pairwise_corr(mat.repartition(int(parts)), nb).collect()
+            ))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert runs[0] == runs[1] == runs[2]
+    assert len(runs[0]) == 12 * 11 // 2

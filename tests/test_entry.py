@@ -9,7 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from logdag_spark.entry_queries import QUERIES
+from logdag_spark.entry_queries import QUERIES, _size_bytes
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -75,3 +75,19 @@ def test_entry_smoke(spark):
 
     df = se.entry(spark)
     assert df.count() > 0
+
+
+@pytest.mark.parametrize(
+    "val, want",
+    [
+        ("128m", 128 << 20),
+        ("128mb", 128 << 20),
+        ("1g", 1 << 30),
+        ("1gb", 1 << 30),
+        ("512k", 512 << 10),
+        ("1024b", 1024),
+        ("1024", 1024),
+    ],
+)
+def test_size_bytes_suffixes(val, want):
+    assert _size_bytes(val) == want

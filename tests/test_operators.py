@@ -555,6 +555,42 @@ def test_simhash_recall_exact_vs_bruteforce(spark, docs_with_dups):
         dedup.simhash_near_dups(docs_with_dups, max_hamming=8, n_tables=0)
 
 
+def test_simhash_variant_fanout_is_capped(spark, docs_with_dups, monkeypatch):
+    """One 64-bit slice at tolerance 8 would need ~4.9e9 variant masks:
+    the count is checked before any mask is enumerated.  One slice at
+    tolerance 1 needs 65 masks, one of them the bit-63 flip, which must
+    fit the signed long mask column and keep recall exact."""
+    import itertools
+
+    from logdag_spark.operators.dedup import hamming64, simhash_signatures
+
+    def no_enumeration(*_a, **_k):
+        raise AssertionError("variant masks enumerated before the cap check")
+
+    with monkeypatch.context() as m:
+        m.setattr(itertools, "combinations", no_enumeration)
+        with pytest.raises(ValueError, match="variant masks"):
+            dedup.simhash_near_dups(docs_with_dups, max_hamming=8, n_tables=1)
+
+    got = {
+        (r["id1"], r["id2"], r["hamming"])
+        for r in dedup.simhash_near_dups(
+            docs_with_dups, max_hamming=1, n_tables=1
+        ).collect()
+    }
+    sig = simhash_signatures(docs_with_dups)
+    a, b = sig.toDF("id1", "s1"), sig.toDF("id2", "s2")
+    ham = hamming64(F.col("s1"), F.col("s2"))
+    want = {
+        (r["id1"], r["id2"], r["h"])
+        for r in a.join(b, F.col("id1") < F.col("id2"))
+        .select("id1", "id2", ham.alias("h"))
+        .where(F.col("h") <= 1)
+        .collect()
+    }
+    assert got == want and want
+
+
 def test_ivf_topk_recall_on_planted_clusters(spark, clustered_vecs):
     """IVF (spherical-kmeans cells + n_probe) recovers cluster siblings
     and ≥90% of brute-force top-2 neighbors."""
